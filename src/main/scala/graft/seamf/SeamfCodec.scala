@@ -3,7 +3,7 @@ package graft.seamf
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.security.MessageDigest
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
-import org.tukaani.xz.{LZMA2Options, XZInputStream, XZOutputStream}
+import org.tukaani.xz.{BasicArrayCache, LZMA2Options, XZInputStream, XZOutputStream}
 
 /** seamf container codec: tar member extraction, XZ (LZMA) payload
   * decompression, SHA-512 integrity.
@@ -47,9 +47,21 @@ object SeamfCodec {
       data.getOrElse(throw new IllegalArgumentException("no .sigmf-data member")))
   }
 
-  /** XZ-decompress (the dominant ingest cost, per seamf.py:1038-1040). */
+  /** Memory cap of one XZ decoder, in KiB: admits every preset `xz` and
+    * `lzma` can write (preset 9 needs about 65 MiB), so a block header that
+    * declares a huge dictionary fails with `MemoryLimitException` before
+    * anything is allocated instead of exhausting the heap.
+    */
+  val XzMemoryLimitKiB: Int = 128 * 1024
+
+  /** XZ-decompress (the dominant ingest cost, per seamf.py:1038-1040).
+    * Decoders draw their LZMA dictionary (8 MiB for preset-6 files) from
+    * xz-java's shared `BasicArrayCache` and return it on `close`, so a task
+    * decoding many files allocates the dictionary once, not once per file.
+    */
   def xzDecompress(bytes: Array[Byte]): Array[Byte] = {
-    val in = new XZInputStream(new ByteArrayInputStream(bytes))
+    val in = new XZInputStream(new ByteArrayInputStream(bytes),
+      XzMemoryLimitKiB, BasicArrayCache.getInstance())
     try in.readAllBytes() finally in.close()
   }
 
@@ -59,24 +71,6 @@ object SeamfCodec {
     val out = new XZOutputStream(bos, new LZMA2Options(preset))
     out.write(bytes); out.finish(); out.close()
     bos.toByteArray
-  }
-
-  /** Enumerate `.sigmf` members of a zip archive (reference
-    * `read_seamf_zipfile`, ziparchive.py:365-447; the central-directory
-    * caching machinery of MultiProcessingZipFile is unnecessary here — each
-    * zip is one executor task and is read once, streaming).
-    */
-  def unpackZip(bytes: Array[Byte]): Seq[(String, Array[Byte])] = {
-    val zin = new java.util.zip.ZipInputStream(new ByteArrayInputStream(bytes))
-    val out = Seq.newBuilder[(String, Array[Byte])]
-    var e = zin.getNextEntry
-    while (e != null) {
-      if (!e.isDirectory && e.getName.endsWith(".sigmf"))
-        out += ((e.getName, zin.readAllBytes()))
-      e = zin.getNextEntry
-    }
-    zin.close()
-    out.result()
   }
 
   /** Build a zip archive from (name, bytes) members (fixtures). */

@@ -156,12 +156,18 @@ private[graft] object HadoopZip {
     out.result()
   }
 
-  /** Fetch and decode one member with positioned reads: local header (30
-    * bytes + its name/extra) to locate the data, then exactly
-    * `compressedSize` bytes, inflated if DEFLATE-stored. The stream
-    * cursor is never moved, so callers share one stream across members.
+  /** Fetch and decode one member: [[readStored]] then [[decodeStored]]. */
+  def readEntry(in: FSDataInputStream, e: Entry): Array[Byte] =
+    decodeStored(e, readStored(in, e))
+
+  /** Fetch one member's stored bytes with positioned reads: local header
+    * (30 bytes + its name/extra) to locate the data, then exactly
+    * `compressedSize` bytes. The stream cursor is never moved, so callers
+    * share one stream across members. This is the I/O half of a member
+    * read; a local header that disagrees with the central directory means
+    * the archive changed under the listing and fails here too.
     */
-  def readEntry(in: FSDataInputStream, e: Entry): Array[Byte] = {
+  def readStored(in: FSDataInputStream, e: Entry): Array[Byte] = {
     require(e.compressedSize <= Int.MaxValue && e.uncompressedSize <= Int.MaxValue,
       s"zip member too large to buffer: ${e.name} " +
         s"(${e.compressedSize} -> ${e.uncompressedSize} bytes)")
@@ -172,6 +178,13 @@ private[graft] object HadoopZip {
     val dataOff = e.localHeaderOffset + 30 + u16(hdr, 26) + u16(hdr, 28)
     val comp = new Array[Byte](e.compressedSize.toInt)
     in.readFully(dataOff, comp)
+    comp
+  }
+
+  /** The in-memory half of a member read: the stored bytes as-is, or
+    * inflated when the member is DEFLATE-compressed.
+    */
+  def decodeStored(e: Entry, comp: Array[Byte]): Array[Byte] =
     e.method match {
       case 0 => comp // STORED
       case 8 => // DEFLATE (raw, no zlib wrapper)
@@ -193,5 +206,4 @@ private[graft] object HadoopZip {
       case m => throw new UnsupportedOperationException(
         s"zip member ${e.name}: unsupported compression method $m")
     }
-  }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.Text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
@@ -54,11 +55,15 @@ import graft.seamf.{HalfFloat, SeamfCodec, SeamfMetadata, SeamfReader}
   *     to the scan before tasks run; IN-sets collapse to their [min, max]
   *     envelope (a permitted superset — the join re-filters) and tighten
   *     the decode prune with no static predicate in the query.
-  *   - '''Partition planning packs by bytes.''' Input splits are whole
-  *     members packed to `maxPartitionBytes` using Spark's open-cost
-  *     formula, so 2000 small sweeps do not become 2000 tasks (the
+  *   - '''Partition planning fills every slot.''' Input splits are
+  *     contiguous runs of whole members: `max(defaultParallelism,
+  *     ceil(total / maxPartitionBytes))` bins (never more than members),
+  *     cut at cumulative cost (compressed size plus Spark's 4 MiB open
+  *     cost), so 2000 small sweeps do not become 2000 tasks, every core
+  *     gets an equal share, and listing order is row order (the
   *     reference's `partition_size` knob, ziparchive.py:260-263, derived
-  *     from sizes instead of hand-tuned).
+  *     from sizes instead of hand-tuned). A batch scan plans once per
+  *     query: one listing, one central-directory read per archive.
   *   - '''Vectorized reads.''' The default read path emits one
   *     `ColumnarBatch` per decoded file into reused `OnHeapColumnVector`s:
   *     `trace` floats append straight from the decoded payload at each
@@ -103,8 +108,9 @@ import graft.seamf.{HalfFloat, SeamfCodec, SeamfMetadata, SeamfReader}
   * path — on an object store, one LIST per prefix); splits are planned on
   * the driver from sizes alone; decode is embarrassingly parallel and
   * CPU-bound on XZ exactly like the reference (seamf.py:1038-1040). The
-  * Hadoop `Configuration` rides to executors inside the factory (Writable
-  * round-trip), so credentials/filesystem settings survive serialization.
+  * Hadoop `Configuration` rides to executors inside the factory as plain
+  * key/value pairs, so credentials/filesystem settings survive
+  * serialization.
   */
 class SeamfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "seamf"
@@ -496,9 +502,7 @@ private[graft] class SeamfScan(paths: Seq[String],
     * reports just the metadata fraction).
     */
   override def estimateStatistics(): Statistics = {
-    val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val bytes = listFiles(hadoopConf).map(_.getLen).sum
+    val bytes = batchFiles.map(_.getLen).sum
     val est = if (needPayload) bytes else math.max(bytes / 8, 1L)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
@@ -523,6 +527,21 @@ private[graft] class SeamfScan(paths: Seq[String],
       else Option(fs.globStatus(path)).toSeq.flatten.filter(_.isFile)
     }.sortBy(_.getPath.toString)
 
+  /** The batch scan's listing, taken once: Spark asks for statistics and
+    * partitions from several copies of one physical plan, and each ask
+    * would otherwise re-list the paths and re-read every central
+    * directory. Offsets and micro-batches never use it — each trigger
+    * lists afresh — so a streaming scan's size estimate is the landing
+    * directory as this scan first listed it.
+    */
+  private lazy val batchFiles: Seq[FileStatus] = listFiles(scanConf)
+
+  /** The session's Hadoop conf, copied once per scan for the batch listing
+    * and the reader factory.
+    */
+  private lazy val scanConf: Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
+
   /** Scan entries: plain `.sigmf` files (member = "") and `.sigmf` members
     * of `.zip` archives — the reference's primary container
     * (ziparchive.py:365-447). Central directories are enumerated on the
@@ -535,8 +554,8 @@ private[graft] class SeamfScan(paths: Seq[String],
     * header offset) ride inside the split so executors never re-read a
     * central directory.
     */
-  private def listEntries(hadoopConf: Configuration): Seq[SeamfScanEntry] =
-    listFiles(hadoopConf).flatMap(expand(_, hadoopConf))
+  private lazy val batchPartitions: Array[InputPartition] =
+    pack(batchFiles.flatMap(expand(_, scanConf)))
 
   /** One file's scan entries — zip archives fan out to member entries;
     * SHARED by the batch listing and the streaming batch planner so the
@@ -555,33 +574,15 @@ private[graft] class SeamfScan(paths: Seq[String],
     } else Seq(SeamfScanEntry(p, "", -1, f.getLen, f.getLen, -1L))
   }
 
-  /** Whole members packed to Spark's split-size formula:
-    * min(maxPartitionBytes, max(openCost, total/defaultParallelism)).
-    */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
-    pack(listEntries(hadoopConf))
-  }
+  override def planInputPartitions(): Array[InputPartition] = batchPartitions
 
   private def pack(entries: Seq[SeamfScanEntry]): Array[InputPartition] = {
     val spark = SparkSession.active
-    val openCost = 4L * 1024 * 1024
-    val confMax = Option(options.get("maxPartitionBytes")).map(_.toLong)
+    val maxBytes = Option(options.get("maxPartitionBytes")).map(_.toLong)
       .getOrElse(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-    val total = entries.map(_.compressedSize + openCost).sum
-    val target = math.min(confMax,
-      math.max(openCost, total / math.max(1, spark.sparkContext.defaultParallelism)))
-
-    val bins = ArrayBuffer.empty[ArrayBuffer[SeamfScanEntry]]
-    var binBytes = 0L
-    entries.foreach { e =>
-      val cost = e.compressedSize + openCost
-      if (bins.isEmpty || binBytes + cost > target) {
-        bins += ArrayBuffer(e); binBytes = cost
-      } else { bins.last += e; binBytes += cost }
-    }
-    bins.map(b => SeamfInputPartition(b.toArray): InputPartition).toArray
+    SeamfScan.pack(entries.toIndexedSeq, spark.sparkContext.defaultParallelism,
+      maxBytes).map(b => SeamfInputPartition(b): InputPartition)
   }
 
   // ---- MicroBatchStream: the landing directory as a stream ---------------
@@ -752,14 +753,60 @@ private[graft] class SeamfScan(paths: Seq[String],
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream = this
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf())
+  // built once per scan (Spark asks again from each copy of the physical
+  // plan): the factory closes over constructor state, the shared prune
+  // box and the scan's Hadoop conf
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val conf = new SerializableHadoopConf(scanConf)
     val columnar = Option(options.get("columnar")).forall(_.toBoolean)
     new SeamfReaderFactory(conf, pruneBox, required, tz, raise,
       checkHash, needPayload, limit, pushedAgg, columnar)
   }
 
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+}
+
+private[sources] object SeamfScan {
+  /** Spark's per-file open cost (`spark.sql.files.openCostInBytes`'s
+    * default), charged to every entry so tiny members still weigh.
+    */
+  val OpenCost: Long = 4L * 1024 * 1024
+
+  /** Contiguous bins of `entries`, balanced by cost (compressed size plus
+    * [[OpenCost]]). There are `k = min(#entries, max(slots,
+    * ceil(total / maxPartitionBytes)))` bins, so a small scan fills every
+    * task slot and a large one keeps bins near `maxPartitionBytes`. An
+    * entry lands in the bin its cost midpoint falls in (bin `b` covers
+    * cumulative cost `[b, b + 1) * total / k`), clamped so that no bin is
+    * empty; concatenating the bins gives back the listing, so row order
+    * and the plan depend on the listing alone.
+    */
+  def pack(entries: IndexedSeq[SeamfScanEntry], slots: Int,
+      maxPartitionBytes: Long): Array[Array[SeamfScanEntry]] = {
+    val n = entries.length
+    if (n == 0) return Array.empty
+    require(maxPartitionBytes > 0,
+      s"maxPartitionBytes must be positive, got $maxPartitionBytes")
+    val costs = entries.map(_.compressedSize + OpenCost)
+    val total = costs.sum
+    val byBytes = total / maxPartitionBytes +
+      (if (total % maxPartitionBytes == 0) 0 else 1)
+    val k = math.min(n.toLong, math.max(slots.toLong, byBytes)).toInt
+    val bins = Array.fill(k)(Array.newBuilder[SeamfScanEntry])
+    var start = 0L
+    var bin = -1
+    var j = 0
+    while (j < n) {
+      val mid = ((2.0 * start + costs(j)) * k / (2.0 * total)).toInt
+      // at most one bin further than the previous entry, and never so far
+      // behind that the entries left cannot give each remaining bin one
+      bin = math.max(k - (n - j), math.min(bin + 1, math.min(k - 1, mid)))
+      bins(bin) += entries(j)
+      start += costs(j)
+      j += 1
+    }
+    bins.map(_.result())
+  }
 }
 
 /** One scan entry: member = "" is a plain `.sigmf` file (sizes = file
@@ -769,7 +816,13 @@ private[graft] class SeamfScan(paths: Seq[String],
   */
 private[sources] case class SeamfScanEntry(path: String, member: String,
     method: Int, compressedSize: Long, uncompressedSize: Long,
-    localHeaderOffset: Long)
+    localHeaderOffset: Long) {
+  /** The `file` column: the path, or `archive!member`. */
+  def label: String = if (member.isEmpty) path else s"$path!$member"
+  def zipEntry: HadoopZip.Entry =
+    HadoopZip.Entry(member, method, compressedSize, uncompressedSize,
+      localHeaderOffset)
+}
 
 /** One packed bin of scan entries. */
 private[sources] case class SeamfInputPartition(
@@ -811,15 +864,23 @@ private[sources] object SeamfOffset {
   * same as local disk. Members of the same zip are adjacent in a bin
   * (listing order), so one `FSDataInputStream` stays open across
   * consecutive members and each member costs exactly two positioned
-  * reads (local header + data; [[HadoopZip.readEntry]]) — the
+  * reads (local header + data; [[HadoopZip.readStored]]) — the
   * reference's MultiProcessingZipFile reopen pattern, ziparchive.py:
   * 104-146, without the local-path restriction.
+  *
+  * This is the I/O phase of a read, and the readers let its failures
+  * fail the task so that Spark retries it: a missing or truncated file
+  * is never counted as a corrupt one. Everything after it works on bytes
+  * in memory ([[SeamfFileDecode.sigmfBytes]] onward).
   */
 private[sources] final class SeamfEntryFetcher(conf: Configuration) {
   private var cachedPath: String = _
   private var cachedIn: org.apache.hadoop.fs.FSDataInputStream = _
 
-  def fetch(entry: SeamfScanEntry): (String, Array[Byte]) =
+  /** The entry's stored bytes: the whole file, or the zip member as it is
+    * stored in the archive (still deflated if it was).
+    */
+  def fetch(entry: SeamfScanEntry): Array[Byte] =
     if (entry.member.isEmpty) {
       val path = new Path(entry.path)
       val fs = path.getFileSystem(conf)
@@ -829,7 +890,7 @@ private[sources] final class SeamfEntryFetcher(conf: Configuration) {
       val bytes = new Array[Byte](len.toInt)
       val in = fs.open(path)
       try in.readFully(0, bytes) finally in.close()
-      (entry.path, bytes)
+      bytes
     } else {
       if (cachedPath != entry.path) {
         close()
@@ -837,10 +898,7 @@ private[sources] final class SeamfEntryFetcher(conf: Configuration) {
         cachedIn = path.getFileSystem(conf).open(path)
         cachedPath = entry.path
       }
-      val bytes = HadoopZip.readEntry(cachedIn,
-        HadoopZip.Entry(entry.member, entry.method, entry.compressedSize,
-          entry.uncompressedSize, entry.localHeaderOffset))
-      (s"${entry.path}!${entry.member}", bytes)
+      HadoopZip.readStored(cachedIn, entry.zipEntry)
     }
 
   def close(): Unit = {
@@ -872,16 +930,34 @@ class SeamfSkippedFilesMetric extends CustomSumMetric {
 private[sources] case class SeamfTaskMetric(name: String, value: Long)
     extends CustomTaskMetric
 
-/** Hadoop `Configuration` is not `java.io.Serializable`; it IS a Hadoop
-  * `Writable`, so round-trip it through its own `write`/`readFields`.
+/** Hadoop `Configuration` is not `java.io.Serializable`; it travels as its
+  * key/value pairs (`Text` strings, so values past 64 KB and any Unicode
+  * survive) and is rebuilt with `set`. `Configuration.write` would also
+  * carry each property's source list as separate gzip streams — twice the
+  * bytes and several times the decode cost in every task. Deprecated keys
+  * are left out: `get` resolves them through their replacement keys, which
+  * travel, and re-setting both could let whichever came last win.
   */
 private[sources] final class SerializableHadoopConf(
     @transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit =
-    value.write(out)
+  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+    import scala.jdk.CollectionConverters._
+    val pairs = value.iterator().asScala
+      .filterNot(e => Configuration.isDeprecated(e.getKey)).toArray
+    out.writeInt(pairs.length)
+    pairs.foreach { e =>
+      Text.writeString(out, e.getKey)
+      Text.writeString(out, e.getValue)
+    }
+  }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     value = new Configuration(false)
-    value.readFields(in)
+    var i = in.readInt()
+    while (i > 0) {
+      val key = Text.readString(in)
+      value.set(key, Text.readString(in))
+      i -= 1
+    }
   }
 }
 
@@ -944,10 +1020,10 @@ private[sources] class SeamfAggPartitionReader(
   private var nSkipped = 0L
   private val fetcher = new SeamfEntryFetcher(conf)
 
-  private def decodeNext(): Iterator[InternalRow] = {
-    val (pathStr, bytes) = fetcher.fetch(entries(fileIdx))
-
-    val raw = SeamfCodec.unpackTar(bytes)
+  private def decodeNext(entry: SeamfScanEntry,
+      stored: Array[Byte]): Iterator[InternalRow] = {
+    val pathStr = entry.label
+    val raw = SeamfCodec.unpackTar(SeamfFileDecode.sigmfBytes(entry, stored))
     val meta = SeamfMetadata.parse(raw.metaJson, tz)
     // digest only when verification is on (the SeamfFileDecode rule): on
     // this metadata-only path the sha512 over the UNUSED compressed
@@ -1009,8 +1085,10 @@ private[sources] class SeamfAggPartitionReader(
 
   override def next(): Boolean = {
     while (!rows.hasNext && fileIdx < entries.length) {
+      val entry = entries(fileIdx)
+      val stored = fetcher.fetch(entry) // I/O failures fail the task
       rows =
-        try decodeNext()
+        try decodeNext(entry, stored)
         catch { case _: Exception if !raise => nSkipped += 1; Iterator.empty }
       fileIdx += 1
     }
@@ -1033,22 +1111,29 @@ private[sources] class SeamfAggPartitionReader(
   * the `trace` column is required -> per-slot row emit (SURVEY §3.1 steps
   * 2-7 as one executor-side function).
   */
-/** Shared per-file decode prelude for the row and columnar readers:
-  * fetch -> untar -> metadata parse -> sha512 check -> decode-prune the
-  * slot list -> (only if some slot survives AND the schema needs `trace`)
-  * XZ-inflate the payload. Returns None when every slot was pruned — the
-  * payload of a fully-pruned file is never decompressed.
+/** Shared per-file decode for the row and columnar readers, on bytes the
+  * fetcher already brought into memory: zip inflate -> untar -> metadata
+  * parse -> sha512 check -> decode-prune the slot list -> (only if some
+  * slot survives AND the schema needs `trace`) XZ-inflate the payload.
+  * Returns None when every slot was pruned — the payload of a fully-pruned
+  * file is never decompressed. Every failure here is a content error,
+  * which `errors=log` skips and counts.
   */
 private[sources] object SeamfFileDecode {
   final case class Decoded(path: String, meta: SeamfMetadata.SeamfMeta,
       keep: Seq[SeamfMetadata.TraceSlot], payload: Array[Float])
 
-  def decode(fetcher: SeamfEntryFetcher, entry: SeamfScanEntry,
+  /** The `.sigmf` tar from an entry's stored bytes. */
+  def sigmfBytes(entry: SeamfScanEntry, stored: Array[Byte]): Array[Byte] =
+    if (entry.member.isEmpty) stored
+    else HadoopZip.decodeStored(entry.zipEntry, stored)
+
+  def decode(entry: SeamfScanEntry, stored: Array[Byte],
       tz: Option[String], checkHash: Boolean,
       prune: SeamfReader.TracePrune, needPayload: Boolean)
       : Option[Decoded] = {
-    val (pathStr, bytes) = fetcher.fetch(entry)
-    val raw = SeamfCodec.unpackTar(bytes)
+    val pathStr = entry.label
+    val raw = SeamfCodec.unpackTar(sigmfBytes(entry, stored))
     val meta = SeamfMetadata.parse(raw.metaJson, tz)
     // digest only when verification is on: sha512 over the compressed
     // payload is the third-largest per-file cost after XZ and the fetch
@@ -1094,8 +1179,9 @@ private[sources] class SeamfPartitionReader(
   private var nSkipped = 0L
   private val fetcher = new SeamfEntryFetcher(conf)
 
-  private def decodeNext(): Iterator[InternalRow] = {
-    val d = SeamfFileDecode.decode(fetcher, entries(fileIdx), tz, checkHash,
+  private def decodeNext(entry: SeamfScanEntry,
+      stored: Array[Byte]): Iterator[InternalRow] = {
+    val d = SeamfFileDecode.decode(entry, stored, tz, checkHash,
       prune, needPayload) match {
       case None => nPruned += 1; return Iterator.empty
       case Some(dd) =>
@@ -1136,11 +1222,11 @@ private[sources] class SeamfPartitionReader(
     // `limit` rows — remaining files in the bin are never opened
     if (limit.exists(emitted >= _)) return false
     while (!rows.hasNext && fileIdx < entries.length) {
+      val entry = entries(fileIdx)
+      val stored = fetcher.fetch(entry) // I/O failures fail the task
       rows =
-        try decodeNext()
-        catch {
-          case e: Exception if !raise => nSkipped += 1; Iterator.empty
-        }
+        try decodeNext(entry, stored)
+        catch { case _: Exception if !raise => nSkipped += 1; Iterator.empty }
       fileIdx += 1
     }
     if (rows.hasNext) { current = rows.next(); emitted += 1; true }
@@ -1251,8 +1337,10 @@ private[sources] class SeamfColumnarPartitionReader(
     if (limit.exists(emitted >= _)) return false
     ready = false
     while (!ready && fileIdx < entries.length) {
+      val entry = entries(fileIdx)
+      val stored = fetcher.fetch(entry) // I/O failures fail the task
       try {
-        SeamfFileDecode.decode(fetcher, entries(fileIdx), tz, checkHash,
+        SeamfFileDecode.decode(entry, stored, tz, checkHash,
             prune, needPayload) match {
           case None => nPruned += 1
           case Some(d) =>
@@ -1261,7 +1349,7 @@ private[sources] class SeamfColumnarPartitionReader(
             ready = true
         }
       } catch {
-        case e: Exception if !raise => nSkipped += 1
+        case _: Exception if !raise => nSkipped += 1
       }
       fileIdx += 1
     }
